@@ -169,7 +169,7 @@ object Report {
       "vocab_growth" -> (() => rowsJson(operators.AuditQueries.l75.fn(spark, sfDir))),
       "pii_by_source" -> (() => rowsJson(operators.AuditQueries.l78.fn(spark, sfDir))))
     // Build the panels CONCURRENTLY: each is an independent bounded
-    // collect, the shared-subtree memos are ConcurrentHashMaps (one
+    // collect, the shared subtrees are eager [[Pins]] (one
     // materialization however many panels race), and Spark's scheduler
     // interleaves the jobs — a sequential build leaves the cluster idle
     // between one panel's stages and the next's (cold sf0.1 build

@@ -308,7 +308,13 @@ object GramHash64 {
   * REPRESENTATION must stay the exact strings DuckDB rebuilds.
   *
   * Same null contract as [[GramHash64]]: NULL under k tokens (the
-  * HOF form's size-guard rows), null-poisoned by a null token. */
+  * HOF form's size-guard rows), null-poisoned by a null token.
+  *
+  * Retention: every gram of a row shares that row's one buffer, so a
+  * single gram kept past the row (e.g. buffered in an aggregation
+  * before unsafe conversion) keeps the WHOLE document's bytes alive. A
+  * consumer that caches individual grams long-term must copy them
+  * (`UTF8String.fromBytes(g.getBytes)`) at that site. */
 case class GramStrings(left: Expression, right: Expression)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
 

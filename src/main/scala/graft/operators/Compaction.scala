@@ -82,7 +82,7 @@ import org.apache.spark.sql.functions.{broadcast, col, input_file_name}
   * needing concurrent writers is the transactional-table-format
   * regime, where this same scheme is the format's commit protocol.
   *
-  * HIGH-FILE-COUNT bound, measured (graft.BenchManifest, round 18, at
+  * HIGH-FILE-COUNT bound, measured (BENCH_NOTES round 18, at
   * ~34k one-row files — the 100 TB-artifact file-count regime at 2 GB
   * targets): the flat-manifest machinery itself is flat-cheap —
   * `appendInto`'s two tree walks + atomic manifest extension 0.29 s,

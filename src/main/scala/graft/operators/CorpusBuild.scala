@@ -46,7 +46,7 @@ import graft.streaming.AdmissionPipeline
   *
   * Scale shape: every stage is the standalone component's own plan —
   * nothing new executes here. The only additions are the ledger union
-  * (a per-doc projection per stage) and one lazy checkpoint of the
+  * (a per-doc projection per stage) and one eager checkpoint of the
   * survivor slice (consumed by the manifest rollup AND the shard
   * writer — same discipline as [[ReleaseFlow.release]]'s decision
   * pin).
@@ -91,11 +91,10 @@ object CorpusBuild {
     // cleaned_out ledger arm and the gate's shard) and the C4+PII
     // battery is the dominant per-doc cost of a cleansing build — an
     // unpinned lineage would re-run it per consumer (the same
-    // multiplier the release's shard checkpoint exists to stop). Lazy;
-    // the first consumer materializes it. A raw passthrough needs no
-    // pin (plain scans re-read cheaply).
+    // multiplier the release's shard checkpoint exists to stop). A raw
+    // passthrough needs no pin (plain scans re-read cheaply).
     val staged =
-      if (cfg.cleanse) AdmissionPipeline.cleanse(raw).localCheckpoint(false)
+      if (cfg.cleanse) AdmissionPipeline.cleanse(raw).localCheckpoint()
       else raw
     // born-null and cleansed-to-null rows cannot be screened or indexed
     // (the release gate would drop them silently); the ledger accounts
@@ -131,7 +130,7 @@ object CorpusBuild {
     val labels = graft.functions.Components.closeAdaptive(edges)
     // pinned once: three consumers (the curation ledger rows, the
     // sampled-out rows, the survivor slice) would otherwise each re-run
-    // the canonicality window + closure join. Lazy, admitted-bounded.
+    // the canonicality window + closure join. Admitted-bounded.
     val curated = admitted
       .withColumn("exact_canon",
         min("doc_id").over(Window.partitionBy(LlmQueries.normHash)))
@@ -153,7 +152,7 @@ object CorpusBuild {
       .select(col("lang"), col("doc_id"),
         lit("sampling").as("stage"), lit("sampled_out").as("outcome"))
     // one survivor frame feeds the ledger, the manifest rollup AND the
-    // shard writer — pin it once (lazy; bounded by survivor count)
+    // shard writer — pin it once (bounded by survivor count)
     val survivors = postCuration
       .filter(Sampling.stratifiedKeep(col("doc_id"), col("lang"),
         SamplingQueries.thresholds))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{DQ, Tables}
+import graft.{DQ, Pins, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -69,17 +69,13 @@ object CorpusBuildQueries {
     s"${sys.props("java.io.tmpdir")}/graft_build_gate_" +
       s"${ReleaseQueries.nonce}_${d.replaceAll("[^A-Za-z0-9.]", "_")}"
 
-  /** One SOLO frame per (JVM, source dir), shared by [[c1]] and
-    * [[c2]]: clean held-out docs ([[ReleaseQueries.cleanHeld]]) that
-    * also share no 8-gram with any OTHER clean doc — the intra-shard
-    * determinism filter. The gram self-join is fixture machinery worth
-    * paying once per source dir, not per gate (the same memo
-    * discipline as the shared init). Lazy checkpoint; the first gate
-    * materializes it. */
-  private val soloMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  /** One pinned SOLO frame per source dir ([[graft.Pins]]), shared by
+    * [[c1]] and [[c2]]: clean held-out docs ([[ReleaseQueries.cleanHeld]])
+    * that also share no 8-gram with any OTHER clean doc — the
+    * intra-shard determinism filter. The gram self-join is fixture
+    * machinery worth paying once per source dir, not per gate. */
   private def soloFrame(s: SparkSession, d: String): DataFrame =
-    soloMemo.computeIfAbsent(s.sparkContext.applicationId + ":" + d, _ => {
+    Pins.shared(s, "solo", d) {
       val clean = ReleaseQueries.cleanHeld(s, d)
       val cleanG = SamplingQueries.docGramsK(clean, Seq("doc_id"), 8,
         hashed = false)
@@ -87,8 +83,8 @@ object CorpusBuildQueries {
         .join(cleanG.as("b"), col("a.gram") === col("b.gram") &&
           col("a.doc_id") =!= col("b.doc_id"))
         .select(col("a.doc_id").as("doc_id")).distinct()
-      clean.join(sharedIds, Seq("doc_id"), "left_anti").localCheckpoint(false)
-    })
+      clean.join(sharedIds, Seq("doc_id"), "left_anti")
+    }
 
   /** The build's complete accounting as ONE oracle-comparable frame:
     * ledger rollup per (stage, outcome, lang) — cleanse/gate/curation/
@@ -137,8 +133,8 @@ object CorpusBuildQueries {
         .withColumn("ta", split(lower(col("text")), "\\s+"))
       val corpus = all.filter(ReleaseQueries.inCorpus)
       // SOLO: clean docs sharing no 8-gram with any OTHER clean doc —
-      // the intra-shard determinism filter (see the scaladoc). Memoized
-      // + pinned once per (JVM, dir): SIX shard classes here and four
+      // the intra-shard determinism filter (see the scaladoc). Pinned
+      // once per (JVM, dir): SIX shard classes here and four
       // in c2 draw from it, and an unpinned lineage re-runs the whole
       // gram anti-join chain per class (the r14 shard-pinning lesson,
       // fixture-side).

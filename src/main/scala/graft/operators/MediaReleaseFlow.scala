@@ -96,9 +96,9 @@ object MediaReleaseFlow {
     // four subtrees (decode, perceptual screen, byte screen, final
     // join), so an unpinned shard LINEAGE re-executes per arm — a
     // multiplier whenever the lineage carries compute (a planted
-    // construction, an upstream decode). One lazy materialization,
+    // construction, an upstream decode). One eager materialization,
     // bounded by SHARD size, never the corpus.
-    val shard = shard0.localCheckpoint(false)
+    val shard = shard0.localCheckpoint()
     val gates = MediaAdmission.Gates(
       StreamingMediaDedup.readIndex(spark, phashDir(base)),
       exactHashes = Some(readByteIndex(spark, base).select("h")))

@@ -125,6 +125,42 @@ object ReleaseFlow {
     decided
   }
 
+  /** The release shard's pin — what [[releaseDeferred]] screens, and
+    * what the PlanDecide/BenchDecide profilers build so they see the
+    * production frame. Pin the SHARD once before screening: decide()
+    * probes the batch from six arms (sketch, grams, hash, stop-word
+    * stats, …) and each arm is its own subtree, so an unpinned shard
+    * LINEAGE re-executes per arm — invisible for a plain parquet-backed
+    * shard, a multiplier whenever the lineage carries compute (a cure,
+    * a decode, a planted construction: r1's gate measured ~16 s from
+    * exactly this). One materialization, bounded by SHARD size — never
+    * the corpus.
+    *
+    * Compute-once: the pin carries `n_chars` (unless the shard already
+    * has it), the canonical whitespace tokenization
+    * ([[LlmQueries.PreTokens]]), and the gate pre-columns
+    * ([[LlmQueries.withGatePre]]: the MinHash shingle array + K=64
+    * signature, the positional span-gram hashes, the winnow
+    * fingerprints). decide()'s screen arms AND the artifact appends
+    * project one computed derivation each instead of re-running it per
+    * consumer — bit-identical values by construction
+    * (LlmQueries.tokensOf). BenchDecide round 19: the re-sketched
+    * near-dup arm alone was ~2.9 s of the ~3.2 s decision wall; with the
+    * pre-columns it reads ~0.7 s.
+    *
+    * EAGER, deliberately: AQE runs the six arms' stages as parallel
+    * jobs, and a lazy pin would be recomputed by every un-cached-yet
+    * task wave racing through it (r1's decision stages burned ~10× the
+    * pin's CPU in duplicated recomputes). It materializes at the
+    * shard's own scan parallelism: a repartition-to-cores fan-out was
+    * measured and REJECTED (BENCH_NOTES round 19). */
+  private[graft] def pinShard(shard: DataFrame): DataFrame =
+    LlmQueries.withGatePre(
+      (if (shard.columns.contains("n_chars")) shard
+       else shard.withColumn("n_chars", length(col("text")).cast("long")))
+        .withColumn(LlmQueries.PreTokens, split(lower(col("text")), "\\s+")))
+      .localCheckpoint()
+
   /** [[release]] with the appends FORKED instead of awaited: returns
     * (decided, joinAppends). The decision frame is already eagerly
     * checkpointed (pre-append state, unchanged), so a caller may run
@@ -145,50 +181,7 @@ object ReleaseFlow {
     // screen drops them up front.
     val shard = shard0.filter(col("text").isNotNull)
     val addChars = !shard.columns.contains("n_chars")
-    // Pin the SHARD once before screening: decide() probes the batch
-    // from six arms (sketch, grams, hash, stop-word stats, …) and each
-    // arm is its own subtree, so an unpinned shard LINEAGE re-executes
-    // per arm — invisible for a plain parquet-backed shard (six pruned
-    // re-scans), a multiplier whenever the lineage carries compute (a
-    // cure, a decode, a planted construction: r1's gate measured ~16 s
-    // from exactly this). One materialization, bounded by SHARD size —
-    // never the corpus — the same discipline as the decided checkpoint
-    // below. Lazy: the first arm materializes it.
-    // tokenize-once (guide §2.3's "don't recompute what you can carry"):
-    // the canonical whitespace tokenization rides IN the pinned shard as
-    // the reserved [[LlmQueries.PreTokens]] column, so decide()'s screen
-    // arms (sketch, span grams, winnow, stop-word stats) and the four
-    // artifact appends all reuse one split instead of re-running the
-    // regex per consumer — bit-identical values by construction
-    // (LlmQueries.tokensOf). Dropped from the returned frame below.
-    // compute-once, one level up from tokenize-once: the MinHash
-    // shingle array + K=64 signature, the positional span-gram hashes,
-    // and the winnow fingerprint array all ride in the pin
-    // ([[LlmQueries.withGatePre]]), so decide()'s screen arms AND the
-    // artifact appends project one computed derivation each instead of
-    // re-running it per consumer (BenchDecide round 19: the re-sketched
-    // near-dup arm alone was ~2.9 s of the ~3.2 s decision wall; with
-    // the pre-cols it reads ~0.7 s). The fan-out makes the one place
-    // that still PAYS the per-doc compute — the pin's materialization —
-    // run at the session's parallelism when the shard arrives as a few
-    // scan partitions (the single-file fixture case; a cluster-scale
-    // shard is already wider and fanOut is a no-op).
-    // EAGER pin (plain localCheckpoint), deliberately: decide() reads
-    // this frame from six concurrent arm subtrees, and AQE runs their
-    // stages as parallel jobs — a lazy pin would be recomputed by every
-    // un-cached-yet task wave racing through it (measured: r1's
-    // decision stages burned ~10× the pin's CPU in duplicated
-    // recomputes before the cache landed). One up-front job
-    // materializes the heavy per-doc derivations exactly once, at the
-    // shard's own scan parallelism (a repartition-to-cores fan-out was
-    // measured and REJECTED — the exchange plus the wider checkpoint's
-    // per-task overheads cost more than the parallel pre-compute wins
-    // at any width tried; BENCH_NOTES round 19).
-    val withChars = LlmQueries.withGatePre(
-      (if (addChars) shard.withColumn("n_chars", length(col("text")).cast("long"))
-       else shard)
-        .withColumn(LlmQueries.PreTokens, split(lower(col("text")), "\\s+")))
-      .localCheckpoint()
+    val withChars = pinShard(shard)
     val gates = AdmissionPipeline.Gates(
       StreamingNearDup.readIndex(spark, neardupDir(base)),
       // an empty LONG gram frame leaves the contaminated arm inert

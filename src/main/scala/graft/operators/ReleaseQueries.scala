@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{DQ, Tables}
+import graft.{DQ, Pins, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -146,17 +146,14 @@ object ReleaseQueries {
   private[operators] def inCorpus =
     substring(md5(concat(col("doc_id").cast("string"), lit(":r1"))), 1, 4) < "c000"
 
-  /** ONE checkpointed CLEAN held-out frame per (app, source dir) —
+  /** ONE pinned CLEAN held-out frame per source dir ([[graft.Pins]]) —
     * r1, r2 and c1 all derive the identical set (held-out docs sharing
     * no 8-token gram with the corpus, the oracle-replayed determinism
     * filter), so the corpus-gram explode + anti-join chain prices once
-    * per JVM instead of once per gate ([[LlmQueries.sharedPairs]]'s
-    * memo discipline; deterministic, so a memo read cannot differ from
-    * a rebuild). Columns: (lang, doc_id, text, ta). */
-  private val cleanMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    * per JVM instead of once per gate. Columns: (lang, doc_id, text,
+    * ta). */
   private[operators] def cleanHeld(s: SparkSession, d: String): DataFrame =
-    cleanMemo.computeIfAbsent(s.sparkContext.applicationId + ":" + d, _ => {
+    Pins.shared(s, "cleanHeld", d) {
       val all = docs(s, d).filter(col("text").isNotNull)
         .select(col("lang"), col("doc_id"), col("text"))
         .withColumn("ta", split(lower(col("text")), "\\s+"))
@@ -168,8 +165,8 @@ object ReleaseQueries {
           hashed = false)
         .join(corpusG8, Seq("gram"), "left_semi")
         .select("doc_id").distinct()
-      held.join(dirty, Seq("doc_id"), "left_anti").localCheckpoint(false)
-    })
+      held.join(dirty, Seq("doc_id"), "left_anti")
+    }
 
   /** One internal space doubled after the first space — the token
     * array (split on \s+) is unchanged, so the MinHash sketch is
@@ -191,7 +188,7 @@ object ReleaseQueries {
       // "clean" held-out docs: share no 8-token gram with the corpus —
       // the determinism filter (see the object scaladoc). String grams
       // (hashed = false) so the oracle replays the filter byte-for-byte;
-      // memoized + checkpointed per JVM ([[cleanHeld]] — r2/c1 share it)
+      // pinned once per JVM ([[cleanHeld]] — r2/c1 share it)
       val clean = cleanHeld(s, d)
       val off = LlmQueries.plantedOffset(all, "doc_id")
       // the quote source: the lowest-id corpus doc with >= 16 tokens;

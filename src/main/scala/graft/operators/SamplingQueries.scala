@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{DQ, Tables}
+import graft.{DQ, Pins, Tables}
 import graft.functions.Sampling
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -331,7 +331,11 @@ object SamplingQueries {
         explode(array_distinct(col(LlmQueries.PreGrams))).as("gram"): _*)
     else if (hashed) {
       // native kernel, any width: same distinct hash set per doc as the
-      // string-distinct-then-hash form (see the pre-branch note)
+      // string-distinct-then-hash form (see the pre-branch note). This
+      // branch too now hashes BEFORE it dedups: a 64-bit collision
+      // between two distinct grams of one doc drops one row here,
+      // which every downstream dedups anyway — deliberate, not a bug
+      // to "fix" back to the string-distinct form.
       graft.functions.NativeTextExprs.ensureRegistered(df.sparkSession)
       df.withColumn("ta", LlmQueries.tokensOf(df))
         .filter(size(col("ta")) >= k)
@@ -637,25 +641,17 @@ object SamplingQueries {
       .localCheckpoint(), k)
   }
 
-  /** ONE checkpointed positional string-gram frame of the PLANTED
-    * corpus per snapshot, shared by every SpanK-gram consumer — l33's
-    * span accounting, l64/l65's ExactSubstr cuts, l66's duplication
-    * profile. Same (appId, dir) memo discipline (and rationale) as
-    * [[LlmQueries.sharedPairs]]: before the memo each of the four
-    * catalog queries re-ran the tokenize + posexplode + 15-gram build
-    * from scratch; now the first action materializes the lazy
-    * checkpoint once and the rest read rows — which is also the
-    * production shape (the gram frame IS the persisted
-    * [[SubstringIndex]]; this is its single-job stand-in). The frame
-    * is a deterministic pure function of the snapshot, so a memo read
-    * cannot differ from a rebuild. */
-  private val plantedGramsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
+  /** ONE pinned positional string-gram frame of the PLANTED corpus per
+    * snapshot ([[graft.Pins]]), shared by every SpanK-gram consumer —
+    * l33's span accounting, l64/l65's ExactSubstr cuts, l66's
+    * duplication profile. Without the pin each of the four catalog
+    * queries re-ran the tokenize + posexplode + 15-gram build from
+    * scratch. It is also the production shape: the gram frame IS the
+    * persisted [[SubstringIndex]], and this is its single-job
+    * stand-in. */
   private[graft] def sharedPlantedGrams(s: SparkSession, d: String): DataFrame =
-    plantedGramsMemo.computeIfAbsent(s.sparkContext.applicationId + ":" + d,
-      _ => spanGrams(LlmQueries.plantedFull(docs(s, d)), SpanK,
-        hashed = false).localCheckpoint(eager = false))
+    Pins.shared(s, "plantedGrams", d)(
+      spanGrams(LlmQueries.plantedFull(docs(s, d)), SpanK, hashed = false))
 
   /** The PROBE half of l33, factored so the gram frame can come from
     * either the in-job checkpoint ([[substringSpans]]) or the persisted

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan assertions — the 100 TB guardrails: no accidental
@@ -129,12 +131,11 @@ class PlanSpec extends AnyFunSuite {
     // per-JVM memo (Tables.rowCount), so after this warm-up call,
     // CONSTRUCTING the plans below must start zero Spark jobs. l12 is
     // included as the always-lazy reference point (probeLshJoin).
-    // l26 additionally consumes the shared checkpointed centroid frame
-    // (sharedIvfCentroids): under AQE even a lazy localCheckpoint
-    // executes its intermediate stages at construction, so — exactly
+    // l26 additionally consumes the shared centroid pin
+    // (sharedIvfCentroids, an eager Pins.shared frame), so — exactly
     // like sharedPairs for l9/l28/l29 — the FIRST construction per JVM
     // trains, and the pin covers every construction after (the shape
-    // bench re-runs and plan sweeps actually hit). Warm both memos.
+    // bench re-runs and plan sweeps actually hit). Warm both.
     graft.Tables.rowCount(spark, sf, "embeddings")
     operators.LlmQueries.l26.fn(spark, sf)
     val jobs = new java.util.concurrent.atomic.AtomicInteger
@@ -154,6 +155,27 @@ class PlanSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
     assert(jobs.get() === 0,
       s"${jobs.get()} Spark job(s) launched during plan construction")
+  }
+
+  test("shared frames go through Pins: no lazy checkpoint and no private " +
+      "frame memo anywhere under src/main/scala") {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root),
+      s"no src/main/scala under ${sys.props("user.dir")}")
+    val banned = Seq(
+      """localCheckpoint\(\s*false\s*\)""",
+      """eager\s*=\s*false""",
+      """ConcurrentHashMap\[\s*String\s*,\s*DataFrame\s*\]""").map(_.r)
+    val files = java.nio.file.Files.walk(root)
+    val hits =
+      try files.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .flatMap { p =>
+          val text = new String(java.nio.file.Files.readAllBytes(p),
+            java.nio.charset.StandardCharsets.UTF_8)
+          banned.flatMap(_.findAllIn(text)).map(m => s"$p: $m")
+        }.toList
+      finally files.close()
+    assert(hits.isEmpty, s"share frames through graft.Pins instead:\n${hits.mkString("\n")}")
   }
 
   test("p2 filter reaches the parquet scan as a pushed filter") {

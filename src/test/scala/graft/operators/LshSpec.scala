@@ -80,9 +80,10 @@ class LshSpec extends AnyFunSuite {
     // scan's codegen span — an ObjectHashAggregate (udaf/collect_set)
     // in the plan means the shuffle-free doc stage regressed. The only
     // aggregates left are the 1-row invariant counters (HashAggregate).
-    // Composed WITHOUT the sharedPairs memo: the catalog l9 reads the
-    // sketch from the shared checkpoint, so its own plan no longer
-    // CONTAINS the sketch subtree — this is the subtree's plan shape.
+    // Composed WITHOUT the sharedPairs pin: the catalog l9 reads the
+    // sketch from the eagerly materialized Pins frame, so its own plan
+    // no longer CONTAINS the sketch subtree — this is the subtree's
+    // plan shape.
     val df = LlmQueries.l9From(spark, sf,
       LlmQueries.candidatePairs(LlmQueries.planted(Tables.documents(spark, sf))))
     df.collect()
@@ -186,7 +187,7 @@ class LshSpec extends AnyFunSuite {
     // The shingle frame feeds four consumers; the scaladoc's claim that
     // Spark shares the shuffled subtrees must hold in the EXECUTED
     // (AQE-final) plan, not just in intent. Composed without the
-    // sharedPairs memo, as above — the sketch subtree's own shape.
+    // sharedPairs pin, as above — the sketch subtree's own shape.
     val df = LlmQueries.l9From(spark, sf,
       LlmQueries.candidatePairs(LlmQueries.planted(Tables.documents(spark, sf))))
     df.collect()
